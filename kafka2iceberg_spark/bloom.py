@@ -98,15 +98,18 @@ def file_bloom_entry(path: str, cols: list[str], fpp: float) -> dict:
     return out
 
 
-def build_blooms(table, spark, cols: list[str], fpp: float = 0.01) -> int:
-    """Attach bloom sidecars for ``cols`` to every current data file that
-    lacks them; commits one metadata-only snapshot. Returns files updated.
+def bloom_manifests(
+    table, spark, snap: dict, cols: list[str], fpp: float = 0.01
+) -> tuple[dict, int]:
+    """Bloom sidecars for ``cols`` on every data file of ``snap`` that
+    lacks them -> (partition -> manifest name, files updated). Writes the
+    sidecars and the new manifests; the caller commits the snapshot
+    (``IcebergLite.build_blooms``).
 
     One executor task per file; the driver receives only bitmaps and writes
     the sidecars + new manifests (same single-writer maintenance discipline
     as ``compact``).
     """
-    v_new, snap, crefs = table._commit_meta("main")
     by_part = table.resolve_manifests(snap)
     todo: list[tuple[str, str]] = []  # (pval, path)
     for pv, files in by_part.items():
@@ -115,7 +118,7 @@ def build_blooms(table, spark, cols: list[str], fpp: float = 0.01) -> int:
             if not set(cols) <= have:
                 todo.append((pv, f["path"]))
     if not todo:
-        return 0
+        return snap["manifests"], 0
     paths = [p for _, p in todo]
     built = (
         spark.sparkContext.parallelize(paths, max(1, min(len(paths), 64)))
@@ -143,23 +146,7 @@ def build_blooms(table, spark, cols: list[str], fpp: float = 0.01) -> int:
                 entry["bloom"] = refs
             new_files.append(entry)
         manifests[pv] = table._write_manifest(new_files)
-    table._write_snapshot(
-        {
-            "snapshot_id": uuid.uuid4().hex,
-            "version": v_new,
-            "parent": snap["snapshot_id"],
-            "parent_version": snap["version"],
-            "ref": "main",
-            "refs": crefs,
-            "batch_id": None,  # metadata-only, replay guard unaffected
-            "commit_kind": "build-blooms",
-            "schema": snap.get("schema"),
-            "manifests": manifests,
-            "delete_manifests": snap.get("delete_manifests") or [],
-            "lineage": [],
-        }
-    )
-    return len(todo)
+    return manifests, len(todo)
 
 
 def plan_scan_eq(table, col: str, value, version: int | None = None) -> dict:

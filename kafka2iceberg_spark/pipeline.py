@@ -355,6 +355,36 @@ def robust_event_max(
     return min(mx, p99 + int(clamp_us))
 
 
+def _start_foreach_batch(
+    df: DataFrame,
+    checkpoint: str,
+    trigger: dict | None,
+    table: IcebergLite | None = None,
+    commit=None,
+):
+    """Start ``df`` as a checkpointed foreachBatch query. With ``table``,
+    every micro-batch is appended to it under the micro-batch id, in
+    append output mode (the replay guard makes a replayed batch a no-op);
+    otherwise ``commit(batch_df, batch_id)`` runs per micro-batch, in
+    update output mode. ``trigger`` holds DataStreamWriter.trigger
+    keywords (None: the default processing-time trigger)."""
+    mode = "update"
+    if table is not None:
+        mode = "append"
+
+        def commit(batch_df: DataFrame, batch_id: int) -> None:
+            table.commit_append(batch_df, str(batch_id))
+
+    writer = (
+        df.writeStream.foreachBatch(commit)
+        .option("checkpointLocation", checkpoint)
+        .outputMode(mode)
+    )
+    if trigger:
+        writer = writer.trigger(**trigger)
+    return writer.start()
+
+
 def start_upsert_sink(
     parsed: DataFrame,
     table: IcebergLite,
@@ -448,14 +478,7 @@ def start_upsert_sink(
             )
             table.expire_snapshots(keep_last=keep_snapshots)
 
-    writer = (
-        parsed.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start_foreach_batch(parsed, checkpoint, trigger, commit=commit)
 
 
 def start_corrupt_dlq(
@@ -478,17 +501,7 @@ def start_corrupt_dlq(
         F.current_timestamp().alias("dlq_ts"),
     )
 
-    def commit(batch_df: DataFrame, batch_id: int) -> None:
-        table.commit_append(batch_df, str(batch_id))
-
-    writer = (
-        bad.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start_foreach_batch(bad, checkpoint, trigger, table=table)
 
 
 def start_ddl_sink(
@@ -514,17 +527,7 @@ def start_ddl_sink(
         partition_col="partition" if from_kafka else None,
     ).withColumn("ingest_ts", F.current_timestamp())
 
-    def commit(batch_df: DataFrame, batch_id: int) -> None:
-        table.commit_append(batch_df, str(batch_id))
-
-    writer = (
-        ddl.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start_foreach_batch(ddl, checkpoint, trigger, table=table)
 
 
 def start_append_sink(
@@ -535,17 +538,7 @@ def start_append_sink(
 ):
     """K1 append sink (no PK configured — reference append path)."""
 
-    def commit(batch_df: DataFrame, batch_id: int) -> None:
-        table.commit_append(batch_df, str(batch_id))
-
-    writer = (
-        parsed.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start_foreach_batch(parsed, checkpoint, trigger, table=table)
 
 
 def enrich_with_dim(
@@ -601,14 +594,7 @@ def start_enriched_sink(
         else:
             table.commit_append(enriched, str(batch_id))
 
-    writer = (
-        parsed.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start_foreach_batch(parsed, checkpoint, trigger, commit=commit)
 
 
 def dedup_stream(
@@ -660,17 +646,7 @@ def start_session_sink(
         ],
     )
 
-    def commit(batch_df: DataFrame, batch_id: int) -> None:
-        table.commit_append(batch_df, str(batch_id))
-
-    writer = (
-        sessions.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start_foreach_batch(sessions, checkpoint, trigger, table=table)
 
 
 def start_pairs_sink(
@@ -715,17 +691,7 @@ def start_pairs_sink(
             turns, gap=gap, watermark_delay=watermark_delay
         )
 
-    def commit(batch_df: DataFrame, batch_id: int) -> None:
-        table.commit_append(batch_df, str(batch_id))
-
-    writer = (
-        pairs.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start_foreach_batch(pairs, checkpoint, trigger, table=table)
 
 
 def start_window_sink(
@@ -749,17 +715,7 @@ def start_window_sink(
     ]
     windowed = win.tumbling(wm, size, list(keys or ["role"]), aggs)
 
-    def commit(batch_df: DataFrame, batch_id: int) -> None:
-        table.commit_append(batch_df, str(batch_id))
-
-    writer = (
-        windowed.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start_foreach_batch(windowed, checkpoint, trigger, table=table)
 
 
 def run_ingest_once(
@@ -835,14 +791,7 @@ def start_fanout_sink(
                 txn.append(name, rows)
         txn.commit()
 
-    writer = (
-        raw.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start_foreach_batch(raw, checkpoint, trigger, commit=commit)
 
 
 def start_dynamic_sink(
@@ -916,11 +865,4 @@ def start_dynamic_sink(
         rows = ingest.parse(batch_df, state["spec"], **kafka_cols)
         table.commit_upsert(rows, str(batch_id))
 
-    writer = (
-        raw.writeStream.foreachBatch(commit)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
+    return _start_foreach_batch(raw, checkpoint, trigger, commit=commit)

@@ -21,9 +21,10 @@ the same commit contract over plain parquet — ``IcebergLite``:
     distinct days are rewritten, untouched partitions' files carry forward
     unchanged, exactly like Iceberg CoW MERGE at 100 TB.
 
-When a real Iceberg catalog is on the classpath, ``have_iceberg()`` is true
-and ``merge_into_iceberg`` issues the equivalent SQL MERGE — the rest of the
-pipeline is unchanged.
+``have_iceberg`` and ``merge_into_iceberg`` state the contract of a real
+Iceberg catalog (the same upsert as one SQL MERGE) and are gated on its jar.
+They are not wired into the sink: every pipeline commit goes through
+``IcebergLite``, whether or not the jar is present.
 
 Upsert semantics (K2): last-writer-wins per PK ordered by (ts_ms, offset);
 DELETE events (is_cdc_delete) remove the key — the behavior of the
@@ -202,8 +203,9 @@ def merge_sql(table: str, pk: list[str], source_view: str = "_m_src") -> str:
 def merge_into_iceberg(
     spark: SparkSession, table: str, batch: DataFrame, pk: list[str]
 ) -> None:
-    """Real-Iceberg path: SQL MERGE keyed on the PK (used when the runtime
-    jar is present; functionally identical to IcebergLite.commit_upsert)."""
+    """Real-Iceberg path: SQL MERGE keyed on the PK, functionally identical
+    to IcebergLite.commit_upsert. A jar-gated contract only: the pipeline
+    never calls it, even when the runtime jar is present."""
     batch.createOrReplaceTempView("_m_src")
     spark.sql(merge_sql(table, pk))
 
@@ -420,21 +422,13 @@ class IcebergLite:
         explicit version it names."""
         meta = self.metadata_head()
         main = self.current_snapshot()
-        self._write_snapshot(
-            {
-                "snapshot_id": uuid.uuid4().hex,
-                "version": meta["version"] + 1,
-                "parent": meta["snapshot_id"],
-                "parent_version": meta["version"],
-                "batch_id": None,
-                "commit_kind": kind,
-                "ref": "_meta",
-                "refs": refs,
-                "schema": main.get("schema"),
-                "manifests": main["manifests"],
-                "delete_manifests": main.get("delete_manifests") or [],
-                "lineage": [],
-            }
+        self._commit_snapshot(
+            (meta["version"] + 1, meta, refs),
+            "_meta",
+            commit_kind=kind,
+            schema=main.get("schema"),
+            manifests=main["manifests"],
+            delete_manifests=main.get("delete_manifests") or [],
         )
 
     def create_branch(self, name: str, version: int | None = None) -> int:
@@ -522,6 +516,36 @@ class IcebergLite:
         refs["main"] = {"version": int(version), "type": "branch"}
         self._commit_refs_only(refs, f"rollback:{version}")
         return int(version)
+
+    def _commit_snapshot(
+        self,
+        meta: tuple[int, dict, dict],
+        ref: str = "main",
+        batch_id: str | None = None,
+        **fields,
+    ) -> None:
+        """Build and commit the snapshot record of every commit after v0.
+
+        ``meta`` is ``(v_new, base, refs)`` as :meth:`_commit_meta` returns
+        it. The record parents on ``base`` and carries its schema, manifests
+        and delete manifests; ``fields`` replaces any of those and adds the
+        commit's own keys (``commit_kind``, ``compaction``, ...)."""
+        v_new, base, refs = meta
+        snap = {
+            "snapshot_id": uuid.uuid4().hex,
+            "version": v_new,
+            "parent": base["snapshot_id"],
+            "parent_version": base["version"],
+            "ref": ref,
+            "refs": refs,
+            "batch_id": batch_id,
+            "schema": base.get("schema"),
+            "manifests": base["manifests"],
+            "delete_manifests": base.get("delete_manifests") or [],
+            "lineage": [],
+        }
+        snap.update(fields)
+        self._write_snapshot(snap)
 
     def _write_snapshot(self, snap: dict) -> None:
         """Atomic commit with optimistic concurrency.
@@ -806,29 +830,17 @@ class IcebergLite:
         parsed = PS.parse_spec(fields)
         _validate_spec(parsed)
         self.create()
-        v_new, snap, refs = self._commit_meta("main")
+        meta = self._commit_meta("main")
         # the spec registry is table-global (rides the metadata head, not
         # any one branch) — extend whatever the newest snapshot carries
         reg_json = dict(self.metadata_head().get("partition_specs") or {})
         new_id = max([int(k) for k in reg_json] + [0]) + 1
         reg_json[str(new_id)] = PS.spec_to_json(parsed)
-        self._write_snapshot(
-            {
-                "snapshot_id": uuid.uuid4().hex,
-                "version": v_new,
-                "parent": snap["snapshot_id"],
-                "parent_version": snap["version"],
-                "ref": "main",
-                "refs": refs,
-                "batch_id": None,
-                "commit_kind": "evolve-spec",
-                "schema": snap.get("schema"),
-                "manifests": snap["manifests"],
-                "delete_manifests": snap.get("delete_manifests") or [],
-                "lineage": [],
-                "partition_specs": reg_json,
-                "default_spec_id": new_id,
-            }
+        self._commit_snapshot(
+            meta,
+            commit_kind="evolve-spec",
+            partition_specs=reg_json,
+            default_spec_id=new_id,
         )
         return new_id
 
@@ -948,9 +960,7 @@ class IcebergLite:
         joins, no manifest lookups on the hot path. Sequence ordering is
         what merge-on-read equality deletes are scoped by (Iceberg's
         data_sequence_number)."""
-        stage = os.path.join(
-            self.data_dir, f"s{seq:08d}-b{batch_id}-{uuid.uuid4().hex[:8]}"
-        )
+        stage = self._stage_dir(seq, f"b{batch_id}")
         # cluster rows by partition value before the partitionBy write:
         # one task (→ one file) per date partition instead of
         # tasks × partitions tiny files — at scale this is the difference
@@ -966,22 +976,61 @@ class IcebergLite:
         for entry in sorted(os.listdir(stage)):
             if not entry.startswith("_p="):
                 continue
-            pval = entry.split("=", 1)[1]
-            pdir = os.path.join(stage, entry)
-            files = [
-                {
-                    "path": os.path.join(pdir, f),
-                    **(
-                        self._file_stats(os.path.join(pdir, f))
-                        or {"rows": None}
-                    ),
-                }
-                for f in sorted(os.listdir(pdir))
-                if f.endswith(".parquet")
-            ]
+            files = self._staged_files(os.path.join(stage, entry))
             if files:
-                manifests[pval] = files
+                manifests[entry.split("=", 1)[1]] = files
         return manifests
+
+    def _stage_dir(self, seq: int, kind: str) -> str:
+        """A fresh ``data/s{seq:08d}-{kind}-<id>`` directory name: every file
+        staged under it carries the commit's sequence number in its path."""
+        return os.path.join(
+            self.data_dir, f"s{seq:08d}-{kind}-{uuid.uuid4().hex[:8]}"
+        )
+
+    def _staged_files(self, stage: str) -> list[dict]:
+        """Manifest entries (path + footer stats) for the parquet files a
+        Spark write left in ``stage``."""
+        paths = [
+            os.path.join(stage, f)
+            for f in sorted(os.listdir(stage))
+            if f.endswith(".parquet")
+        ]
+        return [
+            {"path": p, **(self._file_stats(p) or {"rows": None})}
+            for p in paths
+        ]
+
+    def _rewrite_partition(
+        self,
+        spark: SparkSession,
+        snap: dict,
+        seq: int,
+        kind: str,
+        pv: str,
+        files: list[dict],
+        layout=None,
+    ) -> str:
+        """Rewrite one partition's ``files`` into ``s{seq}-{kind}-…/_p={pv}``
+        and return the new manifest name. Outstanding MOR deletes are
+        APPLIED during the rewrite: the new files get sequence ``seq``,
+        newer than every delete, which would otherwise stop covering their
+        superseded rows. ``layout`` shapes the rows into files (default:
+        one file)."""
+        # committed schema (or mergeSchema for pre-evolution tables): a
+        # partition may hold files appended before and after an
+        # add-column/widening evolution — picking one file's schema would
+        # silently drop or narrow the evolved columns on rewrite
+        df = self._apply_equality_deletes(
+            spark,
+            self._read_files(spark, [f["path"] for f in files], snap),
+            snap,
+        )
+        stage = os.path.join(self._stage_dir(seq, kind), f"_p={pv}")
+        with self._micros_timestamps(spark):
+            df = layout(df) if layout is not None else df.coalesce(1)
+            df.write.parquet(stage, mode="overwrite")
+        return self._write_manifest(self._staged_files(stage))
 
     def read(
         self,
@@ -1203,12 +1252,22 @@ class IcebergLite:
     def build_blooms(
         self, spark: SparkSession, cols: list[str], fpp: float = 0.01
     ) -> int:
-        """Attach per-file bloom sidecars for ``cols`` (Puffin analogue);
-        one executor task per data file, metadata-only commit. See
-        bloom.build_blooms."""
+        """Attach per-file bloom sidecars for ``cols`` (Puffin analogue) to
+        every current data file that lacks them; one executor task per data
+        file, one metadata-only commit. Returns files updated. See
+        bloom.bloom_manifests."""
         from . import bloom as bl
 
-        return bl.build_blooms(self, spark, cols, fpp)
+        meta = self._commit_meta("main")
+        manifests, updated = bl.bloom_manifests(
+            self, spark, meta[1], cols, fpp
+        )
+        if updated:
+            # metadata-only: batch_id stays None, replay guard unaffected
+            self._commit_snapshot(
+                meta, commit_kind="build-blooms", manifests=manifests
+            )
+        return updated
 
     def plan_scan_eq(
         self, col: str, value, version: int | None = None
@@ -1389,6 +1448,38 @@ class IcebergLite:
 
     # -- commits ------------------------------------------------------------
 
+    def _is_replay(self, batch_id: str) -> bool:
+        """Create the table if needed, then the K3 replay guard: True when
+        ``batch_id`` is already committed and the commit is a no-op."""
+        self.create()
+        return batch_id in self.committed_batches()
+
+    def _reconcile(
+        self, df: DataFrame, base: T.StructType | None
+    ) -> tuple[DataFrame, T.StructType]:
+        """Schema reconciliation (Iceberg type evolution) of a batch against
+        the table's committed schema ``base``: the batch may widen a column
+        (int->long mid-stream) or add one. Incompatible changes raise HERE,
+        not as a read-time decode failure. Saves the schema hint and returns
+        ``(df conformed to the reconciled schema, reconciled schema)``."""
+        reconciled = (
+            widen_schema(base, df.schema) if base is not None else df.schema
+        )
+        self._save_schema_hint(reconciled)
+        return self._conform(df, reconciled), reconciled
+
+    def _add_files(
+        self, manifests: dict, new: dict[str, list[dict]]
+    ) -> dict:
+        """``manifests`` with each partition's ``new`` files appended to its
+        manifest (or in a new one); other partitions keep theirs."""
+        out = dict(manifests)
+        for pv, files in new.items():
+            if pv in out:
+                files = self._load_manifest(out[pv]) + files
+            out[pv] = self._write_manifest(files)
+        return out
+
     def commit_append(
         self, df: DataFrame, batch_id: str, branch: str = "main"
     ) -> bool:
@@ -1399,45 +1490,23 @@ class IcebergLite:
         head while main stays untouched until :meth:`fast_forward`. The
         replay guard is table-global across refs, matching Iceberg's
         wap.id-based dedup."""
-        self.create()
-        if str(batch_id) in self.committed_batches():
+        batch_id = str(batch_id)
+        if self._is_replay(batch_id):
             return False
         df = df.cache()
         try:
-            v_new, snap, refs = self._commit_meta(branch)
-            base = self.table_schema(snap)
-            # schema reconciliation (Iceberg type evolution): the batch may
-            # widen a column (int->long mid-stream) or add one; incompatible
-            # changes raise HERE, not as a read-time decode failure
-            reconciled = (
-                widen_schema(base, df.schema) if base is not None else df.schema
-            )
-            self._save_schema_hint(reconciled)
-            new = self._write_files(
-                self._conform(df, reconciled),
-                str(batch_id),
-                v_new,
-            )
-            manifests = dict(snap["manifests"])
-            for pv, files in new.items():
-                if pv in manifests:
-                    files = self._load_manifest(manifests[pv]) + files
-                manifests[pv] = self._write_manifest(files)
-            self._write_snapshot(
-                {
-                    "snapshot_id": uuid.uuid4().hex,
-                    "version": v_new,
-                    "parent": snap["snapshot_id"],
-                    "parent_version": snap["version"],
-                    "ref": branch,
-                    "refs": refs,
-                    "batch_id": str(batch_id),
-                    "commit_kind": "append",
-                    "schema": reconciled.jsonValue(),
-                    "manifests": manifests,
-                    "delete_manifests": snap.get("delete_manifests") or [],
-                    "lineage": [self._lineage_record(df, batch_id)],
-                }
+            meta = self._commit_meta(branch)
+            v_new, snap, _ = meta
+            rows, reconciled = self._reconcile(df, self.table_schema(snap))
+            new = self._write_files(rows, batch_id, v_new)
+            self._commit_snapshot(
+                meta,
+                branch,
+                batch_id,
+                commit_kind="append",
+                schema=reconciled.jsonValue(),
+                manifests=self._add_files(snap["manifests"], new),
+                lineage=[self._lineage_record(df, batch_id)],
             )
             return True
         finally:
@@ -1480,22 +1549,17 @@ class IcebergLite:
         like every data commit; time travel keeps the overwritten data
         reachable until expiration.
         """
-        self.create()
-        if str(batch_id) in self.committed_batches():
+        batch_id = str(batch_id)
+        if self._is_replay(batch_id):
             return False
         df = df.cache()
         try:
-            v_new, snap, refs = self._commit_meta("main")
-            base = self.table_schema(snap)
-            reconciled = (
-                widen_schema(base, df.schema) if base is not None else df.schema
-            )
-            self._save_schema_hint(reconciled)
-            new = self._write_files(
-                self._conform(df, reconciled), str(batch_id), v_new
-            )
+            meta = self._commit_meta("main")
+            v_new, snap, _ = meta
+            rows, reconciled = self._reconcile(df, self.table_schema(snap))
+            new = self._write_files(rows, batch_id, v_new)
             if dynamic:
-                manifests = {
+                kept = {
                     pv: ref
                     for pv, ref in snap["manifests"].items()
                     if pv not in new
@@ -1505,27 +1569,16 @@ class IcebergLite:
                 # than every outstanding delete, so they are immune
                 delete_manifests = snap.get("delete_manifests") or []
             else:
-                manifests = {}
-                delete_manifests = []
-            for pv, files in new.items():
-                manifests[pv] = self._write_manifest(files)
-            self._write_snapshot(
-                {
-                    "snapshot_id": uuid.uuid4().hex,
-                    "version": v_new,
-                    "parent": snap["snapshot_id"],
-                    "parent_version": snap["version"],
-                    "ref": "main",
-                    "refs": refs,
-                    "batch_id": str(batch_id),
-                    "commit_kind": (
-                        "overwrite-dynamic" if dynamic else "overwrite"
-                    ),
-                    "schema": reconciled.jsonValue(),
-                    "manifests": manifests,
-                    "delete_manifests": delete_manifests,
-                    "lineage": [self._lineage_record(df, batch_id)],
-                }
+                kept, delete_manifests = {}, []
+            self._commit_snapshot(
+                meta,
+                "main",
+                batch_id,
+                commit_kind="overwrite-dynamic" if dynamic else "overwrite",
+                schema=reconciled.jsonValue(),
+                manifests=self._add_files(kept, new),
+                delete_manifests=delete_manifests,
+                lineage=[self._lineage_record(df, batch_id)],
             )
             return True
         finally:
@@ -1567,110 +1620,15 @@ class IcebergLite:
         """
         if lo is None and hi is None:
             raise ValueError("delete_range needs at least one bound")
-        self.create()
         batch_id = str(batch_id if batch_id is not None else uuid.uuid4().hex)
-        if batch_id in self.committed_batches():
+        if self._is_replay(batch_id):
             return None
-        lo_n = self._norm_stat_value(lo)
-        hi_n = self._norm_stat_value(hi)
-        v_new, snap, refs = self._commit_meta("main")
-        by_part = self.resolve_manifests(snap)
-
-        carried: dict[str, list[dict]] = {}
-        rewrite_paths: list[str] = []
-        n_dropped = n_rewritten = n_carried = 0
-        for pv, files in by_part.items():
-            keep: list[dict] = []
-            for f in files:
-                rng = (f.get("stats") or {}).get(col)
-                nulls = (f.get("nulls") or {}).get(col)
-                disjoint = contained = False
-                if rng is not None:
-                    mn, mx = rng
-                    try:
-                        if lo_n is not None and mx < lo_n:
-                            disjoint = True
-                        if hi_n is not None and mn > hi_n:
-                            disjoint = True
-                        if not disjoint:
-                            contained = (
-                                (lo_n is None or mn >= lo_n)
-                                and (hi_n is None or mx <= hi_n)
-                                and nulls == 0
-                            )
-                    except TypeError:
-                        pass  # incomparable bounds: conservative rewrite
-                if disjoint:
-                    keep.append(f)
-                    n_carried += 1
-                elif contained:
-                    n_dropped += 1  # metadata-only: file simply not kept
-                else:
-                    rewrite_paths.append(f["path"])
-                    n_rewritten += 1
-            carried[pv] = keep
-
-        new: dict[str, list[dict]] = {}
-        rows_kept = 0
-        if rewrite_paths:
-            df = self._apply_equality_deletes(
-                spark, self._read_files(spark, rewrite_paths, snap), snap
-            )
-            cond = F.lit(True)
-            if lo is not None:
-                cond = cond & (F.col(col) >= F.lit(lo))
-            if hi is not None:
-                cond = cond & (F.col(col) <= F.lit(hi))
-            kept = df.where(~F.coalesce(cond, F.lit(False))).cache()
-            try:
-                rows_kept = kept.count()
-                if rows_kept:
-                    new = self._write_files(kept, batch_id, v_new)
-            finally:
-                kept.unpersist()
-
-        manifests: dict[str, str] = {}
-        for pv in set(carried) | set(new):
-            files = carried.get(pv, []) + new.get(pv, [])
-            if files:
-                manifests[pv] = self._write_manifest(files)
-        self._write_snapshot(
-            {
-                "snapshot_id": uuid.uuid4().hex,
-                "version": v_new,
-                "parent": snap["snapshot_id"],
-                "parent_version": snap["version"],
-                "ref": "main",
-                "refs": refs,
-                "batch_id": batch_id,
-                "commit_kind": "delete",
-                "schema": snap.get("schema"),
-                "manifests": manifests,
-                # still needed by the carried files; rewritten files carry
-                # sequence v_new and are immune
-                "delete_manifests": snap.get("delete_manifests") or [],
-                "lineage": [
-                    {
-                        "batch_id": batch_id,
-                        "rows": rows_kept,
-                        "kind": "delete",
-                        "col": col,
-                        "files_dropped": n_dropped,
-                        "files_rewritten": n_rewritten,
-                        "files_carried": n_carried,
-                        "offsets": {},
-                        "partition_rows": {},
-                    }
-                ],
-            }
+        meta = self._commit_meta("main")
+        counts, rows = self._commit_range(
+            spark, meta, "delete", col, lo, hi, batch_id,
+            lambda df, match: df.where(~match),
         )
-        return {
-            "files_dropped": n_dropped,
-            "files_rewritten": n_rewritten,
-            "files_carried": n_carried,
-            "rows_kept_in_rewrite": rows_kept,
-            "version": v_new,
-        }
+        return {**counts, "rows_kept_in_rewrite": rows, "version": meta[0]}
 
     def update_range(
         self,
@@ -1704,47 +1662,95 @@ class IcebergLite:
             raise ValueError("update_range needs at least one bound")
         if not set_exprs:
             raise ValueError("update_range needs at least one SET column")
-        self.create()
         batch_id = str(batch_id if batch_id is not None else uuid.uuid4().hex)
-        if batch_id in self.committed_batches():
+        if self._is_replay(batch_id):
             return None
-        lo_n = self._norm_stat_value(lo)
-        hi_n = self._norm_stat_value(hi)
-        v_new, snap, refs = self._commit_meta("main")
-        schema = self.table_schema(snap)
+        meta = self._commit_meta("main")
+        schema = self.table_schema(meta[1])
         for name in set_exprs:
             if schema is not None and name not in schema.fieldNames():
                 raise ValueError(
                     f"UPDATE SET column {name!r} is not in the table schema"
                 )
 
+        def set_cols(df: DataFrame, match: Column) -> DataFrame:
+            def _set_col(c: str):
+                e = set_exprs[c]
+                if not isinstance(e, Column):
+                    e = F.lit(e)
+                return F.when(match, e).otherwise(F.col(c)).alias(c)
+
+            return df.select(
+                *[
+                    _set_col(c) if c in set_exprs else F.col(c)
+                    for c in df.columns
+                ]
+            )
+
+        counts, rows = self._commit_range(
+            spark, meta, "update", col, lo, hi, batch_id, set_cols
+        )
+        return {**counts, "rows_in_rewrite": rows, "version": meta[0]}
+
+    def _commit_range(
+        self,
+        spark: SparkSession,
+        meta: tuple[int, dict, dict],
+        kind: str,
+        col: str,
+        lo,
+        hi,
+        batch_id: str,
+        rewrite,
+    ) -> tuple[dict, int]:
+        """Plan, rewrite and commit a CoW range operation (``kind`` is
+        ``delete`` or ``update``) file by file from manifest stats.
+
+        Files the stats prove disjoint from ``lo <= col <= hi`` carry
+        forward; every other file is rewritten as
+        ``rewrite(rows, match)``, where ``match`` is the range predicate
+        with NULL never matching. Only a DELETE may drop a file outright,
+        when the stats prove every value inside the range and no NULLs.
+        Returns ``(file counts, rows written by the rewrite)``."""
+        v_new, snap, _ = meta
+        lo_n = self._norm_stat_value(lo)
+        hi_n = self._norm_stat_value(hi)
+        may_drop = kind == "delete"
         carried: dict[str, list[dict]] = {}
         rewrite_paths: list[str] = []
-        n_rewritten = n_carried = 0
+        n_dropped = n_rewritten = n_carried = 0
         for pv, files in self.resolve_manifests(snap).items():
             keep: list[dict] = []
             for f in files:
                 rng = (f.get("stats") or {}).get(col)
-                disjoint = False
+                disjoint = contained = False
                 if rng is not None:
                     mn, mx = rng
                     try:
-                        if lo_n is not None and mx < lo_n:
-                            disjoint = True
-                        if hi_n is not None and mn > hi_n:
-                            disjoint = True
+                        disjoint = (lo_n is not None and mx < lo_n) or (
+                            hi_n is not None and mn > hi_n
+                        )
+                        contained = (
+                            may_drop
+                            and not disjoint
+                            and (lo_n is None or mn >= lo_n)
+                            and (hi_n is None or mx <= hi_n)
+                            and (f.get("nulls") or {}).get(col) == 0
+                        )
                     except TypeError:
-                        pass
+                        pass  # incomparable bounds: conservative rewrite
                 if disjoint:
                     keep.append(f)
                     n_carried += 1
+                elif contained:
+                    n_dropped += 1  # metadata-only: file simply not kept
                 else:
                     rewrite_paths.append(f["path"])
                     n_rewritten += 1
             carried[pv] = keep
 
         new: dict[str, list[dict]] = {}
-        rows_rewritten = 0
+        rows = 0
         if rewrite_paths:
             df = self._apply_equality_deletes(
                 spark, self._read_files(spark, rewrite_paths, snap), snap
@@ -1754,64 +1760,42 @@ class IcebergLite:
                 cond = cond & (F.col(col) >= F.lit(lo))
             if hi is not None:
                 cond = cond & (F.col(col) <= F.lit(hi))
-            cond = F.coalesce(cond, F.lit(False))  # NULL never matches
-            def _set_col(c: str):
-                e = set_exprs[c]
-                if not isinstance(e, Column):
-                    e = F.lit(e)
-                return F.when(cond, e).otherwise(F.col(c)).alias(c)
-
-            updated = df.select(
-                *[
-                    _set_col(c) if c in set_exprs else F.col(c)
-                    for c in df.columns
-                ]
-            ).cache()
+            out = rewrite(df, F.coalesce(cond, F.lit(False))).cache()
             try:
-                rows_rewritten = updated.count()
-                if rows_rewritten:
-                    new = self._write_files(updated, batch_id, v_new)
+                rows = out.count()
+                if rows:
+                    new = self._write_files(out, batch_id, v_new)
             finally:
-                updated.unpersist()
+                out.unpersist()
 
         manifests: dict[str, str] = {}
         for pv in set(carried) | set(new):
             files = carried.get(pv, []) + new.get(pv, [])
             if files:
                 manifests[pv] = self._write_manifest(files)
-        self._write_snapshot(
-            {
-                "snapshot_id": uuid.uuid4().hex,
-                "version": v_new,
-                "parent": snap["snapshot_id"],
-                "parent_version": snap["version"],
-                "ref": "main",
-                "refs": refs,
-                "batch_id": batch_id,
-                "commit_kind": "update",
-                "schema": snap.get("schema"),
-                "manifests": manifests,
-                "delete_manifests": snap.get("delete_manifests") or [],
-                "lineage": [
-                    {
-                        "batch_id": batch_id,
-                        "rows": rows_rewritten,
-                        "kind": "update",
-                        "col": col,
-                        "files_rewritten": n_rewritten,
-                        "files_carried": n_carried,
-                        "offsets": {},
-                        "partition_rows": {},
-                    }
-                ],
-            }
+        counts = {"files_dropped": n_dropped} if may_drop else {}
+        counts.update(files_rewritten=n_rewritten, files_carried=n_carried)
+        # the base's delete manifests are still needed by the carried
+        # files; rewritten files carry sequence v_new and are immune
+        self._commit_snapshot(
+            meta,
+            "main",
+            batch_id,
+            commit_kind=kind,
+            manifests=manifests,
+            lineage=[
+                {
+                    "batch_id": batch_id,
+                    "rows": rows,
+                    "kind": kind,
+                    "col": col,
+                    **counts,
+                    "offsets": {},
+                    "partition_rows": {},
+                }
+            ],
         )
-        return {
-            "files_rewritten": n_rewritten,
-            "files_carried": n_carried,
-            "rows_in_rewrite": rows_rewritten,
-            "version": v_new,
-        }
+        return counts, rows
 
     def commit_upsert(
         self,
@@ -1831,83 +1815,83 @@ class IcebergLite:
         equality-delete files until compaction/materialize folds them in.
         The right trade for high-frequency streaming triggers against a
         huge table, where CoW's per-batch partition rewrite dominates.
+        Every upsert row is paired with a same-sequence delete of its PK,
+        so readers (``_apply_equality_deletes``) keep the newest version of
+        each PK — Iceberg v2 row-level-delete semantics, the same committed
+        rows as the CoW MERGE for the same stream (tested).
 
         Works for non-CDC tables too (dimension/side tables without an
         ``is_cdc_delete`` column): every batch row is then an upsert.
         """
-        self.create()
-        if str(batch_id) in self.committed_batches():
-            return False
-        if strategy == "mor":
-            return self._commit_upsert_mor(df, batch_id, branch)
-        if strategy != "cow":
+        if strategy not in ("cow", "mor"):
             raise ValueError(f"unknown upsert strategy {strategy!r}")
+        if strategy == "mor" and not self.pk:
+            raise ValueError(
+                "merge-on-read needs equality-delete keys: table has no pk"
+            )
+        batch_id = str(batch_id)
+        if self._is_replay(batch_id):
+            return False
         spark = df.sparkSession
-        has_cdc = "is_cdc_delete" in df.columns
         batch = dedup_batch(df, self.pk).cache()
         try:
-            v_new, snap, refs = self._commit_meta(branch)
-            affected = {
-                r["_p"]
-                for r in batch.select(
-                    self._partition_expr(batch).alias("_p")
-                ).distinct().collect()
-            }
-            # merge against the TARGET ref's head (branch-staged upserts
-            # build on the branch, not on main)
-            current = self.read_partitions(spark, affected, snap)
+            meta = self._commit_meta(branch)
+            v_new, snap, _ = meta
             upserts = (
                 batch.filter(~F.col("is_cdc_delete")).drop("is_cdc_delete")
-                if has_cdc
+                if "is_cdc_delete" in batch.columns
                 else batch
             )
-            # schema evolution (reference addSignTime analogue,
-            # ConnectionUtils.java:54-61, plus Iceberg type widening): the
-            # batch may add columns OR widen one (int->long mid-stream);
-            # reconcile to the lattice supremum, conform both sides, and
-            # commit the new schema with the snapshot
             base = self.table_schema(snap)
-            if base is None and current is not None:
-                base = current.schema
-            reconciled = (
-                widen_schema(base, upserts.schema)
-                if base is not None
-                else upserts.schema
-            )
-            self._save_schema_hint(reconciled)
-            upserts = self._conform(upserts, reconciled)
-            deletes = batch.select(*self.pk).distinct()
+            # MOR is O(batch): the table is never read, new files join
+            # every partition's manifest, and ONE equality-delete file
+            # covers every PK the batch touched (upserted OR cdc-deleted)
+            kept, current, delete_file = snap["manifests"], None, True
+            if strategy == "cow":
+                affected = {
+                    r["_p"]
+                    for r in batch.select(
+                        self._partition_expr(batch).alias("_p")
+                    ).distinct().collect()
+                }
+                # merge against the TARGET ref's head (branch-staged
+                # upserts build on the branch, not on main)
+                current = self.read_partitions(spark, affected, snap)
+                if base is None and current is not None:
+                    base = current.schema
+                # CoW replaces the affected partitions. Outstanding MOR
+                # deletes still cover the others; the rewritten rows get
+                # sequence V+1 (> every delete), so double-application is
+                # impossible. Partition-spec evolution: rows for this
+                # batch's PKs may still live under OLD-spec partition
+                # values ``affected`` can't name. Rewriting every legacy
+                # partition would be O(table); instead cover them with one
+                # equality-delete file at seq V+1 (applies only to
+                # seq < V+1, so this commit's own rows are untouched) — CoW
+                # for the current layout, MOR across layouts, folded in by
+                # compaction.
+                kept = {
+                    pv: ref
+                    for pv, ref in snap["manifests"].items()
+                    if pv not in affected
+                }
+                sid, _ = self.current_spec()
+                delete_file = any(PS.spec_id_of_pval(pv) != sid for pv in kept)
+            # schema evolution (reference addSignTime analogue,
+            # ConnectionUtils.java:54-61, plus Iceberg type widening)
+            upserts, reconciled = self._reconcile(upserts, base)
             if current is not None:
-                # equality delete: drop current rows whose PK appears in the
-                # batch (either replaced or deleted), then add the upserts
-                survivors = self._conform(
-                    current, reconciled
-                ).join(F.broadcast(deletes), on=self.pk, how="left_anti")
-                merged = survivors.unionByName(upserts)
-            else:
-                merged = upserts
-            new = self._write_files(merged, str(batch_id), v_new)
-            manifests = {
-                pv: ref
-                for pv, ref in snap["manifests"].items()
-                if pv not in affected
-            }
-            for pv, files in new.items():
-                manifests[pv] = self._write_manifest(files)
+                # equality delete: drop current rows whose PK appears in
+                # the batch (replaced or deleted), then add the upserts
+                deletes = batch.select(*self.pk).distinct()
+                upserts = self._conform(current, reconciled).join(
+                    F.broadcast(deletes), on=self.pk, how="left_anti"
+                ).unionByName(upserts)
+            manifests = self._add_files(
+                kept, self._write_files(upserts, batch_id, v_new)
+            )
             delete_manifests = list(snap.get("delete_manifests") or [])
-            # partition-spec evolution: rows for this batch's PKs may still
-            # live under OLD-spec partition values the current-spec
-            # ``affected`` set can't name. Rewriting every legacy partition
-            # would be O(table); instead cover them with one equality-delete
-            # file at seq V+1 (applies only to seq < V+1, so this commit's
-            # own rewritten rows are untouched) — CoW for the current
-            # layout, MOR across layouts, folded in by compaction.
-            sid, _ = self.current_spec()
-            if any(
-                PS.spec_id_of_pval(pv) != sid
-                for pv in snap["manifests"]
-                if pv not in affected
-            ):
+            if delete_file:
                 delete_manifests.append(
                     self._write_manifest(
                         self._write_delete_entries(
@@ -1915,25 +1899,15 @@ class IcebergLite:
                         )
                     )
                 )
-            self._write_snapshot(
-                {
-                    "snapshot_id": uuid.uuid4().hex,
-                    "version": v_new,
-                    "parent": snap["snapshot_id"],
-                    "parent_version": snap["version"],
-                    "ref": branch,
-                    "refs": refs,
-                    "batch_id": str(batch_id),
-                    "commit_kind": "upsert-cow",
-                    "schema": reconciled.jsonValue(),
-                    # outstanding MOR deletes still cover the partitions this
-                    # CoW merge did NOT touch; the rewritten partitions' rows
-                    # get sequence V+1 (> every delete), so double-application
-                    # is impossible
-                    "delete_manifests": delete_manifests,
-                    "manifests": manifests,
-                    "lineage": [self._lineage_record(batch, batch_id)],
-                }
+            self._commit_snapshot(
+                meta,
+                branch,
+                batch_id,
+                commit_kind=f"upsert-{strategy}",
+                schema=reconciled.jsonValue(),
+                manifests=manifests,
+                delete_manifests=delete_manifests,
+                lineage=[self._lineage_record(batch, batch_id)],
             )
             return True
         finally:
@@ -1949,83 +1923,10 @@ class IcebergLite:
             batch.select(*self.pk).distinct(),
             T.StructType([f for f in reconciled.fields if f.name in pk_set]),
         )
-        dstage = os.path.join(
-            self.data_dir, f"s{seq:08d}-deletes-{uuid.uuid4().hex[:8]}"
-        )
+        dstage = self._stage_dir(seq, "deletes")
         with self._micros_timestamps(spark):
             dkeys.coalesce(1).write.parquet(dstage, mode="overwrite")
-        return [
-            {
-                "path": os.path.join(dstage, f),
-                **(self._file_stats(os.path.join(dstage, f)) or {"rows": None}),
-            }
-            for f in sorted(os.listdir(dstage))
-            if f.endswith(".parquet")
-        ]
-
-    def _commit_upsert_mor(
-        self, df: DataFrame, batch_id: str, branch: str = "main"
-    ) -> bool:
-        """Merge-on-read upsert: append data files + one equality-delete
-        file, both at sequence V+1. Cost is O(batch) — the existing table
-        is never read and no partition is rewritten, which is what keeps a
-        per-trigger streaming upsert viable against a 100 TB table. Readers
-        drop rows whose PK has a NEWER delete (``_apply_equality_deletes``);
-        every upsert row is paired with a same-sequence delete of its PK, so
-        the newest version of each PK survives and older ones die — Iceberg
-        v2 row-level-delete semantics (reference parity: same committed rows
-        as the CoW MERGE for the same stream, tested)."""
-        if not self.pk:
-            raise ValueError(
-                "merge-on-read needs equality-delete keys: table has no pk"
-            )
-        spark = df.sparkSession
-        has_cdc = "is_cdc_delete" in df.columns
-        batch = dedup_batch(df, self.pk).cache()
-        try:
-            seq, snap, refs = self._commit_meta(branch)
-            upserts = (
-                batch.filter(~F.col("is_cdc_delete")).drop("is_cdc_delete")
-                if has_cdc
-                else batch
-            )
-            base = self.table_schema(snap)
-            reconciled = (
-                widen_schema(base, upserts.schema)
-                if base is not None
-                else upserts.schema
-            )
-            self._save_schema_hint(reconciled)
-            upserts = self._conform(upserts, reconciled)
-            new = self._write_files(upserts, str(batch_id), seq)
-            manifests = dict(snap["manifests"])
-            for pv, files in new.items():
-                if pv in manifests:
-                    files = self._load_manifest(manifests[pv]) + files
-                manifests[pv] = self._write_manifest(files)
-            # ONE equality-delete file per commit: every PK the batch
-            # touched (upserted OR cdc-deleted), written small and compact
-            dentries = self._write_delete_entries(spark, batch, reconciled, seq)
-            self._write_snapshot(
-                {
-                    "snapshot_id": uuid.uuid4().hex,
-                    "version": seq,
-                    "parent": snap["snapshot_id"],
-                    "parent_version": snap["version"],
-                    "ref": branch,
-                    "refs": refs,
-                    "batch_id": str(batch_id),
-                    "commit_kind": "upsert-mor",
-                    "schema": reconciled.jsonValue(),
-                    "manifests": manifests,
-                    "delete_manifests": (snap.get("delete_manifests") or [])
-                    + [self._write_manifest(dentries)],
-                    "lineage": [self._lineage_record(batch, batch_id)],
-                }
-            )
-            return True
-        finally:
-            batch.unpersist()
+        return self._staged_files(dstage)
 
     def materialize_deletes(self, spark: SparkSession) -> int:
         """Fold outstanding equality deletes into the data (Iceberg
@@ -2042,7 +1943,8 @@ class IcebergLite:
         refs = snap.get("delete_manifests") or []
         if not refs or not self.pk:
             return 0
-        seq, snap, crefs = self._commit_meta("main")
+        meta = self._commit_meta("main")
+        seq, snap, _ = meta
         by_part = self.resolve_manifests(snap)
         all_paths = [f["path"] for files in by_part.values() for f in files]
         dagg = self._delete_aggregate(spark, snap) if all_paths else None
@@ -2068,47 +1970,15 @@ class IcebergLite:
             affected = set()
         manifests = dict(snap["manifests"])
         for pv in sorted(affected):
-            files = by_part[pv]
-            df = self._apply_equality_deletes(
-                spark,
-                self._read_files(spark, [f["path"] for f in files], snap),
-                snap,
+            manifests[pv] = self._rewrite_partition(
+                spark, snap, seq, "materialize", pv, by_part[pv]
             )
-            stage = os.path.join(
-                self.data_dir,
-                f"s{seq:08d}-materialize-{uuid.uuid4().hex[:8]}",
-                f"_p={pv}",
-            )
-            with self._micros_timestamps(spark):
-                df.coalesce(1).write.parquet(stage, mode="overwrite")
-            manifests[pv] = self._write_manifest(
-                [
-                    {
-                        "path": os.path.join(stage, f),
-                        **(
-                            self._file_stats(os.path.join(stage, f))
-                            or {"rows": None}
-                        ),
-                    }
-                    for f in sorted(os.listdir(stage))
-                    if f.endswith(".parquet")
-                ]
-            )
-        self._write_snapshot(
-            {
-                "snapshot_id": uuid.uuid4().hex,
-                "version": seq,
-                "parent": snap["snapshot_id"],
-                "parent_version": snap["version"],
-                "ref": "main",
-                "refs": crefs,
-                "batch_id": None,  # reorg — replay guard unaffected
-                "materialize": sorted(affected),
-                "schema": snap.get("schema"),
-                "manifests": manifests,
-                "delete_manifests": [],
-                "lineage": [],
-            }
+        # a reorg, not a data batch: batch_id stays None
+        self._commit_snapshot(
+            meta,
+            materialize=sorted(affected),
+            manifests=manifests,
+            delete_manifests=[],
         )
         return len(affected)
 
@@ -2274,7 +2144,8 @@ class IcebergLite:
         """
         if sort_by and zorder_by:
             raise ValueError("pass sort_by OR zorder_by, not both")
-        v_new, snap, crefs = self._commit_meta("main")
+        meta = self._commit_meta("main")
+        v_new, snap, _ = meta
         # fixed point: a partition the SORT strategy already rewrote into
         # target_files files must not re-trigger every maintenance tick
         # (O(table) rewrite amplification on a long-lived job — review
@@ -2289,78 +2160,38 @@ class IcebergLite:
         }
         if not todo:
             return 0
-        manifests = dict(snap["manifests"])
-        for pv, files in todo.items():
-            # committed schema (or mergeSchema for pre-evolution tables): a
-            # partition may hold files appended before and after an
-            # add-column/widening evolution — picking one file's schema
-            # would silently drop or narrow the evolved columns on rewrite.
-            # Outstanding MOR deletes are APPLIED during the rewrite (the
-            # rewritten files get a sequence newer than every delete, which
-            # would otherwise stop covering their superseded rows).
-            df = self._apply_equality_deletes(
-                spark,
-                self._read_files(spark, [f["path"] for f in files], snap),
-                snap,
-            )
-            stage = os.path.join(
-                self.data_dir,
-                f"s{v_new:08d}-compact-{uuid.uuid4().hex[:8]}",
-                f"_p={pv}",
-            )
-            with self._micros_timestamps(spark), self._dense_range_sampling(
-                spark, enabled=bool(sort_by or zorder_by)
-            ):
-                if zorder_by:
-                    from . import zorder as zo
+        n_files = max(target_files, 1)
+        layout = None
+        if zorder_by:
+            from . import zorder as zo
 
-                    (
-                        df.withColumn("_z", zo.zvalue(df, zorder_by))
-                        .repartitionByRange(max(target_files, 1), F.col("_z"))
-                        .sortWithinPartitions("_z")
-                        .drop("_z")
-                        .write.parquet(stage, mode="overwrite")
-                    )
-                elif sort_by:
-                    sort_cols = [F.col(c) for c in sort_by]
-                    (
-                        df.repartitionByRange(
-                            max(target_files, 1), *sort_cols
-                        )
-                        .sortWithinPartitions(*sort_cols)
-                        .write.parquet(stage, mode="overwrite")
-                    )
-                else:
-                    df.coalesce(1).write.parquet(stage, mode="overwrite")
-            new_files = [
-                {
-                    "path": os.path.join(stage, f),
-                    **(
-                        self._file_stats(os.path.join(stage, f))
-                        or {"rows": None}
-                    ),
-                }
-                for f in sorted(os.listdir(stage))
-                if f.endswith(".parquet")
-            ]
-            manifests[pv] = self._write_manifest(new_files)
-        self._write_snapshot(
-            {
-                "snapshot_id": uuid.uuid4().hex,
-                "version": v_new,
-                "parent": snap["snapshot_id"],
-                "parent_version": snap["version"],
-                "ref": "main",
-                "refs": crefs,
-                "batch_id": None,  # not a data batch — replay guard unaffected
-                "compaction": sorted(todo),
-                "schema": snap.get("schema"),  # reorg, not an evolution
-                "manifests": manifests,
-                # deletes stay: partitions below the file-count threshold
-                # were not rewritten and still need them at read
-                "delete_manifests": snap.get("delete_manifests") or [],
-                "lineage": [],
-            }
+            def layout(df: DataFrame) -> DataFrame:
+                return (
+                    df.withColumn("_z", zo.zvalue(df, zorder_by))
+                    .repartitionByRange(n_files, F.col("_z"))
+                    .sortWithinPartitions("_z")
+                    .drop("_z")
+                )
+        elif sort_by:
+            sort_cols = [F.col(c) for c in sort_by]
+
+            def layout(df: DataFrame) -> DataFrame:
+                return df.repartitionByRange(
+                    n_files, *sort_cols
+                ).sortWithinPartitions(*sort_cols)
+
+        manifests = dict(snap["manifests"])
+        with self._dense_range_sampling(spark, enabled=layout is not None):
+            for pv, files in todo.items():
+                manifests[pv] = self._rewrite_partition(
+                    spark, snap, v_new, "compact", pv, files, layout
+                )
+        # not a data batch: batch_id stays None, the replay guard is
+        # unaffected; the schema is carried (a reorg, not an evolution).
+        # Deletes stay: partitions below the file-count threshold were not
+        # rewritten and still need them at read
+        self._commit_snapshot(
+            meta, compaction=sorted(todo), manifests=manifests
         )
         return len(todo)
 

@@ -16,6 +16,7 @@ from kafka2iceberg_spark.sink import IcebergLite
 PK = ["conv_id", "turn_idx"]
 D1 = datetime.datetime(2024, 9, 1, 5, 0, 0)
 D2 = datetime.datetime(2024, 9, 2, 17, 30, 0)
+D3 = datetime.datetime(2024, 9, 3, 8, 0, 0)
 
 
 def _batch(spark, rows):
@@ -41,14 +42,91 @@ def table(spark, tmp_path):
     t.drop()
 
 
-def test_snapshots_table(spark, table):
+#: version -> (commit_kind, batch_id, parent_version, delete manifests vs
+#: the parent's: "carry", "add" one, or "clear"), for ``every_kind``.
+#: Compaction and materialize snapshots have no commit_kind; they name
+#: their rewritten partitions under their own key instead.
+EVERY_KIND = {
+    1: ("append", "0", 0, "carry"),
+    2: ("upsert-cow", "1", 1, "carry"),
+    3: ("upsert-mor", "2", 2, "add"),
+    4: ("overwrite-dynamic", "3", 3, "carry"),
+    5: ("delete", "d", 4, "carry"),
+    6: ("update", "u", 5, "carry"),
+    7: ("build-blooms", None, 6, "carry"),
+    8: ("create-branch:audit", None, 7, "carry"),
+    # a refs-only snapshot does not move main: the next commit parents on v7
+    9: ("append", "4", 7, "carry"),
+    10: ("compaction", None, 9, "carry"),
+    11: ("upsert-mor", "5", 10, "add"),
+    12: ("materialize", None, 11, "clear"),
+    13: ("evolve-spec", None, 12, "carry"),
+    14: ("upsert-mor", "6", 13, "add"),
+    15: ("overwrite", "7", 14, "clear"),
+}
+
+
+@pytest.fixture()
+def every_kind(spark, table):
+    """``table`` after one commit of every other kind (see EVERY_KIND)."""
+    t = table
+    t.commit_upsert(
+        _batch(spark, [("c2", 0, "b2", D2, 3, 0, False)]), "2", strategy="mor"
+    )
+    t.commit_overwrite(_batch(spark, [("c3", 0, "c", D3, 4, 0, False)]), "3")
+    t.delete_range(spark, "ts", hi=D1, batch_id="d")
+    t.update_range(spark, "ts", {"text": "u"}, lo=D3, batch_id="u")
+    t.build_blooms(spark, ["conv_id"])
+    t.create_branch("audit")
+    t.commit_append(_batch(spark, [("c4", 0, "d", D2, 5, 0, False)]), "4")
+    assert t.compact(spark, min_files_per_partition=2) == 1
+    t.commit_upsert(
+        _batch(spark, [("c4", 0, "d2", D2, 6, 0, False)]), "5", strategy="mor"
+    )
+    assert t.materialize_deletes(spark) == 1
+    t.evolve_partition_spec(["month(ts)"])
+    t.commit_upsert(
+        _batch(spark, [("c3", 0, "c2", D3, 7, 0, False)]), "6", strategy="mor"
+    )
+    t.commit_overwrite(
+        _batch(spark, [("c5", 0, "e", D3, 8, 0, False)]), "7", dynamic=False
+    )
+    return t
+
+
+def test_snapshots_table(spark, every_kind):
+    table = every_kind
     snaps = table.meta_table(spark, "snapshots").orderBy("version").collect()
-    assert [s["version"] for s in snaps] == [0, 1, 2]
-    assert snaps[1]["commit_kind"] == "append"
-    assert snaps[2]["commit_kind"] == "upsert-cow"
-    assert snaps[2]["batch_id"] == "1"
+    assert [s["version"] for s in snaps] == list(range(16))
     # parent chain is consistent
     assert snaps[2]["parent_id"] == snaps[1]["snapshot_id"]
+    record = {
+        "snapshot_id", "version", "parent", "parent_version", "ref", "refs",
+        "batch_id", "schema", "manifests", "delete_manifests", "lineage",
+    }
+    for v, (kind, batch_id, parent_v, deletes) in EVERY_KIND.items():
+        snap, parent = table.snapshot_at(v), table.snapshot_at(parent_v)
+        assert record <= set(snap), v
+        if kind in ("compaction", "materialize"):
+            assert "commit_kind" not in snap, v
+            assert snap[kind] == ["2024-09-02"], v
+        else:
+            assert snap["commit_kind"] == kind, v
+        assert snaps[v]["commit_kind"] == snap.get("commit_kind")
+        assert snaps[v]["batch_id"] == snap["batch_id"] == batch_id, v
+        assert snap["parent_version"] == parent_v, v
+        assert snap["parent"] == parent["snapshot_id"], v
+        assert snap["ref"] == ("_meta" if v == 8 else "main"), v
+        before = parent.get("delete_manifests", [])  # v0 has none
+        after = snap["delete_manifests"]
+        if deletes == "carry":
+            assert after == before, v
+        elif deletes == "add":
+            assert after[:-1] == before and len(after) == len(before) + 1, v
+        else:
+            assert after == [], v
+        assert snaps[v]["delete_manifests"] == len(after)
+    assert table.snapshot_at(13)["default_spec_id"] == 1
 
 
 def test_history_marks_current_ancestors(spark, table):

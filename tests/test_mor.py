@@ -6,7 +6,9 @@ Kafka2IcebergApp.java:95-113's upsert sink — for the same input stream)."""
 from __future__ import annotations
 
 import datetime
+import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafka2iceberg_spark import gen, pipeline
@@ -210,3 +212,34 @@ def test_mor_streaming_sink_with_maintenance(spark, tmp_path):
             .collect())
     )
     assert again == first
+
+
+def test_upsert_strategy_validated_before_replay_guard(spark, tmp_path):
+    """A bad ``strategy`` raises even for an already-committed batch id —
+    the replay guard must not turn a caller's typo into a silent False."""
+    t = IcebergLite(str(tmp_path / "t"), pk=["conv_id", "turn_idx"])
+    t.commit_upsert(_batch(spark, [("a", 0, "v1", 0, 0)]), "0")
+    v = t.current_version()
+    with pytest.raises(ValueError, match="unknown upsert strategy"):
+        t.commit_upsert(_batch(spark, [("a", 0, "v1", 0, 0)]), "0",
+                        strategy="mro")
+    assert t.current_version() == v
+
+
+def test_upsert_invalid_strategy_leaves_fresh_table_uncreated(
+    spark, tmp_path
+):
+    """Validation runs before ``create()``: a rejected commit on a fresh
+    table writes no v0 snapshot (nor any directory)."""
+    no_pk = IcebergLite(str(tmp_path / "no_pk"), pk=[])
+    with pytest.raises(ValueError, match="no pk"):
+        no_pk.commit_upsert(_batch(spark, [("a", 0, "v1", 0, 0)]), "0",
+                            strategy="mor")
+    assert no_pk.current_version() is None
+    typo = IcebergLite(str(tmp_path / "typo"), pk=["conv_id", "turn_idx"])
+    with pytest.raises(ValueError, match="unknown upsert strategy"):
+        typo.commit_upsert(_batch(spark, [("a", 0, "v1", 0, 0)]), "0",
+                           strategy="merge")
+    assert typo.current_version() is None
+    assert not os.path.exists(no_pk.location)
+    assert not os.path.exists(typo.location)

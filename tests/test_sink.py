@@ -202,6 +202,25 @@ def test_concurrent_commit_conflict_detected(spark, table):
     assert "X" not in table.committed_batches()
 
 
+def test_snapshot_writes_stay_inside_sink_module():
+    """The snapshot record format and version allocation have one owner:
+    no package module but sink.py may call ``_write_snapshot`` or
+    ``_commit_meta`` (tests may, as the conflict test above does)."""
+    import pathlib
+
+    import kafka2iceberg_spark
+
+    pkg = pathlib.Path(kafka2iceberg_spark.__file__).parent
+    offenders = [
+        f"{path.relative_to(pkg)}: {call}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path.name != "sink.py" or path.parent != pkg
+        for call in ("._write_snapshot(", "._commit_meta(")
+        if call in path.read_text()
+    ]
+    assert offenders == []
+
+
 def test_crashed_commit_self_heals_via_forward_probe(spark, table):
     """A writer crash between the snapshot link and the hint rename must
     not wedge the table (review finding): the linked snapshot is a
